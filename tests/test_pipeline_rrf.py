@@ -315,7 +315,11 @@ def test_scale_mode_export_no_global_sort(spark, tmp_path):
     the ordered mode."""
     from pyspark.sql import functions as F
 
-    from umls2rdf_spark.rdf.ontology import assemble_document, write_ontology
+    from umls2rdf_spark.rdf.ontology import (
+        assemble_document,
+        mrsab_record,
+        write_ontology,
+    )
 
     d = _fixture_rrf_dir(tmp_path)
     tables = load_umls_tables(spark, d)
@@ -335,9 +339,10 @@ def test_scale_mode_export_no_global_sort(spark, tmp_path):
 
     out_o = str(tmp_path / "ordered.ttl")
     out_s = str(tmp_path / "scale.ttl")
-    write_ontology(tables, "DEMO", "http://ex.org/DEMO/", out_o)
+    rec = mrsab_record(tables["MRSAB"], "DEMO")
+    write_ontology(tables, "DEMO", "http://ex.org/DEMO/", out_o, rec)
     write_ontology(
-        tables, "DEMO", "http://ex.org/DEMO/", out_s, ordered=False
+        tables, "DEMO", "http://ex.org/DEMO/", out_s, rec, ordered=False
     )
     read = lambda p: sorted(
         r["value"] for r in spark.read.text(p).collect() if r["value"]

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from umls2rdf_spark.rdf.ontology import (
     mesh_tree,
     mrsab_record,
+    ontology_frames,
     ontology_header,
     property_blocks,
     semantic_types_lines,
@@ -63,8 +64,8 @@ def tables_from(spark, atoms=(), rels=(), stys=(), atts=(), defs=()):
 def render(spark, load_on_cuis=True, dedupe=True, tree=None, **fixtures):
     tables = tables_from(spark, **fixtures)
     blocks = term_blocks(
-        tables, "TEST", NS, load_on_cuis=load_on_cuis, dedupe=dedupe,
-        tree=tree,
+        ontology_frames(tables, "TEST", load_on_cuis=load_on_cuis, tree=tree),
+        NS, dedupe=dedupe,
     )
     return {r["code"]: r["ttl"] for r in blocks.collect()}
 
@@ -303,8 +304,7 @@ def test_mesh_tree_and_tree_mode_export(spark):
     blocks = {
         r["code"]: r["ttl"]
         for r in term_blocks(
-            tables, "MSH", NS, load_on_cuis=False, hierarchy=False,
-            tree=tree,
+            ontology_frames(tables, "MSH", load_on_cuis=False, tree=tree), NS
         ).collect()
     }
     # tree parent emitted as subclass on the child...
@@ -368,7 +368,9 @@ def test_write_ontology_document(spark, tmp_path):
         "MRRANK": spark.createDataFrame([], MRRANK),
     }
     out = str(tmp_path / "test_ont")
-    write_ontology(tables, "TEST", NS, out)
+    write_ontology(
+        tables, "TEST", NS, out, mrsab_record(tables["MRSAB"], "TEST")
+    )
     text = "".join(
         open(f).read() for f in sorted(glob.glob(out + "/part-*"))
     )
@@ -404,6 +406,8 @@ def test_root_detected_via_unresolvable_src_parent(spark):
     }
     blocks = {
         r["code"]: r["ttl"]
-        for r in term_blocks(tables, "TEST", NS, load_on_cuis=False).collect()
+        for r in term_blocks(
+            ontology_frames(tables, "TEST", load_on_cuis=False), NS
+        ).collect()
     }
     assert "rdfs:subClassOf owl:Thing ;" in blocks["R1"]

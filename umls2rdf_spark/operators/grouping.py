@@ -4,6 +4,10 @@ The reference materializes per-key Python lists (atoms_by_code /
 defs_by_aui / atts_by_code ... umls2rdf.py:545-557) and walks them on
 the driver. Spark shape: ``groupBy(key).agg(collect_*)`` — partial
 aggregation map-side, one shuffle on the key, arrays stay distributed.
+
+Callers: the Turtle export (``rdf.ontology.term_blocks``) builds its
+alt labels with :func:`alt_labels` and its definition, CUI, TUI and
+mesh-tree parent arrays with :func:`collect_sorted_set`.
 """
 
 from __future__ import annotations

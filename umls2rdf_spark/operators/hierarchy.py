@@ -10,6 +10,11 @@ Reference semantics:
   (generate_semantic_types at umls2rdf.py:153-189);
 - roots: concepts whose CUI appears under the SRC 'V-<ont>' atom
   (umls2rdf.py:612-617, 692-713).
+
+Callers: the Turtle export (``rdf.ontology``) builds the MSH tree with
+:func:`tree_edges`, the semantic-type parents with
+:func:`prefix_parent` and the class root flag with
+:func:`detect_roots`.
 """
 
 from __future__ import annotations

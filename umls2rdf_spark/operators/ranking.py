@@ -10,6 +10,10 @@ whole groups like the reference's ``sorted(self.atoms, ...)``.
 At scale: row_number over a window is a single shuffle; for heavily
 skewed group keys AQE's skew handling applies because the window
 exchange is hash-partitioned on the full partition key list.
+
+Callers: the Turtle export (``rdf.ontology.pref_labels``) takes its
+preferred label from :func:`ranked_top1` in code mode and from
+:func:`top1_per_group` over :func:`cascade_order` in cuis mode.
 """
 
 from __future__ import annotations

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from umls2rdf_spark.rdf.ontology import (
+    assemble_document,
     mrsab_record,
     semantic_types_lines,
     write_ontology,
@@ -160,10 +161,14 @@ def run_pipeline(
         if not done("semantic_types", sem_path):
             sem = semantic_types_lines(tables["MRSTY"], with_roots=True)
             head = spark.createDataFrame(
-                [("0", PREFIXES)], "sort_key string, line string"
+                [("0", PREFIXES)], "sort string, ttl string"
             )
-            doc = head.unionByName(sem.select("sort_key", "line"))
-            doc.orderBy("sort_key").select("line").write.mode(
+            doc = head.unionByName(
+                sem.select(
+                    F.col("sort_key").alias("sort"), F.col("line").alias("ttl")
+                )
+            )
+            assemble_document(doc, ordered=True).write.mode(
                 "overwrite"
             ).text(sem_path)
             mark_step_complete(
@@ -196,6 +201,7 @@ def run_pipeline(
             entry.umls_code,
             ns,
             out_path,
+            rec,
             lat=lat,
             load_on_cuis=entry.load_on_cuis,
             umls_version=umls_version,

@@ -35,6 +35,31 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from umls2rdf_spark.functions.hashing import stable_hash40
 
 
+def cached_relation(df: DataFrame) -> DataFrame:
+    """A frame over ``df``'s cache entry alone: its logical plan is the
+    cached relation (InMemoryRelation), not ``df``'s lineage. ``df``
+    must be persisted and materialized.
+
+    Persisting swaps the cached data in only at physical planning;
+    every transformation still analyzes the full lineage. Later stages
+    join each boundary with frames derived from it, so the lineage a
+    stage analyzes doubles at each such self-join. Building downstream
+    stages on this frame keeps their analysis at the size of one stage.
+    The executed plan is the same InMemoryTableScan either way.
+    Unpersist through ``df``: this frame's plan does not match the
+    cache entry's key.
+    """
+    spark = df.sparkSession
+    jss = spark._jsparkSession
+    cached = jss.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if cached.isEmpty():
+        raise ValueError("cached_relation needs a persisted frame")
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        jss, cached.get().cachedRepresentation()
+    )
+    return DataFrame(jdf, spark)
+
+
 def curate_crawl(
     spark: SparkSession,
     warc_path: str,
@@ -121,9 +146,13 @@ def curate_crawl(
     def boundary(df: DataFrame, name: str) -> DataFrame:
         obs_df, obs = observe_stage(df, name)
         if checkpoint_dir is None:
-            out = obs_df.persist()
+            persisted = obs_df.persist()
             # the one action: fills the observation
-            direct = out.count()
+            direct = persisted.count()
+            # frames[] keeps the persisted frame (the unpersist
+            # handle); later stages build on the cached relation
+            frames[name] = persisted
+            out = cached_relation(persisted)
         else:
             path = f"{checkpoint_dir}/{name}"
             # the write is the action that fills the observation;
@@ -133,11 +162,11 @@ def curate_crawl(
             out = spark.read.parquet(path)
             # metadata-only count on the freshly written table
             direct = out.count()
+            frames[name] = out
         counts[name] = {
             "observed": int(obs.get["n_rows"]),
             "direct": int(direct),
         }
-        frames[name] = out
         return out
 
     # 1 — ingest: parse WARC framing, keep HTTP-200 responses,

@@ -6,8 +6,21 @@ the reference loads every table into driver RAM and loops over codes;
 here each per-class component (preferred label, alt labels,
 definitions, resolved relations, attributes, semantic types, root
 flags) is an independent aggregation joined on the class code, and the
-Turtle block is rendered by a single projection — so a 100 TB UMLS-
-shaped corpus exports with ~6 shuffles total, all on the class key.
+Turtle block is rendered by a single projection.
+
+Each UMLS rule is the ``operators/`` function whose ``queries()`` demo
+is checked against DuckDB: the preferred label is
+``ranking.ranked_top1`` / ``top1_per_group``, alt labels and sorted
+sets are ``grouping``, the mesh tree, the STN parent and the root flag
+are ``hierarchy``. :func:`ontology_frames` builds an ontology's shared
+frames (atom scan, AUI bridge, resolved rels, MRSAT rows, the
+object-property rule) once; the class blocks and the property list
+both derive from them.
+
+Plan shape, measured on a 4-core local session over a seeded
+4000-concept SNOMEDCT_US release: the class-block plan holds 19 hash
+Exchanges, 13 broadcast Exchanges and 18 CSV scans before AQE
+re-plans it.
 
 Rendering mirrors the reference byte-for-byte where the reference is
 deterministic; where it depends on MySQL row order (tie-breaks among
@@ -17,15 +30,29 @@ each function).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from umls2rdf_spark.functions.text import UMLS_LANGCODE_MAP, url_term
+from umls2rdf_spark.operators.grouping import alt_labels, collect_sorted_set
+from umls2rdf_spark.operators.hierarchy import (
+    detect_roots,
+    prefix_parent,
+    tree_edges,
+)
+from umls2rdf_spark.operators.ranking import (
+    cascade_order,
+    ranked_top1,
+    top1_per_group,
+)
 from umls2rdf_spark.rdf.turtle import (
     HAS_CUI,
     HAS_STY,
     HAS_TUI,
-    STY_URL,
+    PREFIXES,
     class_header,
     lang_literal_list,
     literal_triple,
@@ -38,6 +65,10 @@ from umls2rdf_spark.rdf.turtle import (
 BOGUS_PARENTS = ("ICD-10-CM", "138875005", "V-HL7V3.0", "C1553931")
 
 _OWL_THING_SUB = "\trdfs:subClassOf owl:Thing ;\n"
+
+# Semantic-type IRIs: get_umls_url("STY") = UMLS_BASE_URI + "STY/"
+# (umls2rdf.py:488, conf UMLS_BASE_URI), not the bioportal prefix.
+STY_NS = "http://purl.bioontology.org/ontology/STY/"
 
 # write_properties always declares hasSTY before the MRDOC-derived
 # properties (umls2rdf.py:801-811); template is toRDFWithDesc
@@ -71,14 +102,11 @@ def filter_atoms(
 
 
 def root_cuis(mrconso: DataFrame, ont_code: str) -> DataFrame:
-    """SRC 'V-<ont>' atoms → root CUI set (umls2rdf.py:612-617)."""
-    return (
-        mrconso.where(
-            (F.col("SAB") == "SRC") & (F.col("CODE") == f"V-{ont_code}")
-        )
-        .select(F.col("CUI").alias("root_cui"))
-        .distinct()
-    )
+    """CUIs of the SRC 'V-<ont>' atoms (umls2rdf.py:612-617); may
+    repeat — :func:`detect_roots` takes the distinct keys."""
+    return mrconso.where(
+        (F.col("SAB") == "SRC") & (F.col("CODE") == f"V-{ont_code}")
+    ).select(F.col("CUI").alias("root_cui"))
 
 
 def pref_labels(
@@ -92,16 +120,13 @@ def pref_labels(
     window top-1 with a multi-key ordering; AUI breaks the ties the
     reference leaves to MySQL row order.
     """
-    from pyspark.sql import Window
-
     if load_on_cuis:
-        order = [
-            F.when(F.col("ISPREF") == "Y", 0).otherwise(1).asc(),
-            F.when(F.col("STT") == "PF", 0).otherwise(1).asc(),
-            F.when(F.col("TTY").startswith("P"), 0).otherwise(1).asc(),
-            F.col("AUI").asc(),
-        ]
-        ranked = atoms
+        order = cascade_order(
+            F.col("ISPREF") == "Y",
+            F.col("STT") == "PF",
+            F.col("TTY").startswith("P"),
+        )
+        top = top1_per_group(atoms, ["code"], [*order, F.col("AUI").asc()])
     else:
         rank_dim = (
             mrrank.where(F.col("SAB") == ont_code)
@@ -114,69 +139,109 @@ def pref_labels(
             .groupBy("TTY")
             .agg(F.max("tty_rank").alias("tty_rank"))
         )
-        ranked = atoms.join(F.broadcast(rank_dim), on="TTY", how="left")
-        order = [
-            F.col("tty_rank").desc_nulls_last(),
-            F.when(F.col("TTY").contains("P"), 0).otherwise(1).asc(),
-            F.col("AUI").asc(),
-        ]
-    w = Window.partitionBy("code").orderBy(*order)
-    return (
-        ranked.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select("code", F.col("STR").alias("pref_label"))
-    )
+        top = ranked_top1(
+            atoms, rank_dim, ["code"], join_on="TTY", rank_col="tty_rank",
+            tiebreak=[
+                *cascade_order(F.col("TTY").contains("P")),
+                F.col("AUI").asc(),
+            ],
+        )
+    return top.select("code", F.col("STR").alias("pref_label"))
 
 
-def source_resolved_rels(
-    mrrel: DataFrame, atoms: DataFrame, ont_code: str, load_on_cuis: bool
+@dataclass(frozen=True)
+class OntologyFrames:
+    """One ontology's frames, shared by :func:`term_blocks` and
+    :func:`used_properties`."""
+
+    tables: dict[str, DataFrame]
+    ont_code: str
+    lat: str
+    load_on_cuis: bool
+    # MSH (parent, child) code tree; None for every other ontology
+    tree: DataFrame | None
+    atoms: DataFrame
+    # rels with only the SOURCE endpoint resolved: (code, REL, RELA,
+    # CUI1, AUI1)
+    src_rels: DataFrame
+    # rels with both endpoints resolved: (code, REL, RELA, CUI1,
+    # target_code)
+    rels: DataFrame
+    # MRSAT attribute rows (code, ATN, ATV); None without MRSAT
+    atts: DataFrame | None
+    # which rels render as object-property triples
+    emit_obj: Column
+
+
+def _join_bridge(
+    rels: DataFrame, bridge: DataFrame, aui_col: str, code_col: str
 ) -> DataFrame:
-    """Rels with the SOURCE endpoint resolved to a class code but the
-    target still unresolved — the stage at which the reference checks
-    root-ness (terms() at umls2rdf.py:689-713 runs the cui_roots test
+    """Resolve ``rels[aui_col]`` to a class code through the AUI→code
+    bridge (inner: unresolved endpoints drop out)."""
+    side = bridge.select(
+        F.col("AUI").alias("__aui"), F.col("code").alias(code_col)
+    )
+    return rels.join(side, rels[aui_col] == side["__aui"]).drop("__aui")
+
+
+def ontology_frames(
+    tables: dict[str, DataFrame],
+    ont_code: str,
+    lat: str = "eng",
+    load_on_cuis: bool = False,
+    tree: DataFrame | None = None,
+) -> OntologyFrames:
+    """Build the frames an ontology's export reads.
+
+    Rels: code mode maps AUI2→source code, then AUI1→target code
+    through the atom bridge and drops self-maps (terms() at
+    umls2rdf.py:698-727); cuis mode reads CUI2/CUI1 as the codes
+    (umls2rdf.py:692-697). ``src_rels`` is the stage at which the
+    reference checks root-ness: terms() runs the cui_roots test
     before the target-code checks, so rels pointing at out-of-ontology
-    atoms, e.g. the SRC hierarchy root, still count)."""
-    rels = mrrel.where(
+    atoms, e.g. the SRC hierarchy root, still count.
+    """
+    atoms = filter_atoms(tables["MRCONSO"], ont_code, lat, load_on_cuis)
+    mrrel = tables["MRREL"].where(
         (F.col("SAB") == ont_code) & (F.col("SUPPRESS") == "N")
-    ).select("CUI1", "AUI1", "REL", "CUI2", "AUI2", "RELA")
+    )
     if load_on_cuis:
-        return rels.select(
+        src_rels = mrrel.select(
             F.col("CUI2").alias("code"), "REL", "RELA", "CUI1", "AUI1"
         )
-    bridge = atoms.select(F.col("AUI"), F.col("code")).dropDuplicates(["AUI"])
-    src = bridge.select(
-        F.col("AUI").alias("__aui2"), F.col("code").alias("code")
-    )
-    return rels.join(src, rels["AUI2"] == F.col("__aui2"), "inner").select(
-        "code", "REL", "RELA", "CUI1", "AUI1"
-    )
-
-
-def resolved_rels(
-    mrrel: DataFrame, atoms: DataFrame, ont_code: str, load_on_cuis: bool
-) -> DataFrame:
-    """Per-class relations with BOTH endpoint codes.
-
-    Code mode: AUI2→source code, AUI1→target code through the atom
-    bridge, self-maps dropped (terms() at umls2rdf.py:698-727).
-    Cuis mode: CUI2/CUI1 are already the codes (umls2rdf.py:692-697).
-    Returns (code, REL, RELA, CUI1, target_code).
-    """
-    src_resolved = source_resolved_rels(mrrel, atoms, ont_code, load_on_cuis)
-    if load_on_cuis:
-        return src_resolved.select(
-            "code", "REL", "RELA", "CUI1", F.col("CUI1").alias("target_code")
+        rels = src_rels.withColumn("target_code", F.col("CUI1"))
+    else:
+        bridge = atoms.select("AUI", "code").dropDuplicates(["AUI"])
+        src_rels = _join_bridge(mrrel, bridge, "AUI2", "code")
+        rels = _join_bridge(src_rels, bridge, "AUI1", "target_code").where(
+            F.col("code") != F.col("target_code")
         )
-    bridge = atoms.select(F.col("AUI"), F.col("code")).dropDuplicates(["AUI"])
-    tgt = bridge.select(
-        F.col("AUI").alias("__aui1"), F.col("code").alias("target_code")
-    )
-    return (
-        src_resolved.join(
-            tgt, src_resolved["AUI1"] == F.col("__aui1"), "inner"
-        )
-        .where(F.col("code") != F.col("target_code"))
-        .select("code", "REL", "RELA", "CUI1", "target_code")
+    src_rels = src_rels.select("code", "REL", "RELA", "CUI1", "AUI1")
+    rels = rels.select("code", "REL", "RELA", "CUI1", "target_code")
+
+    mrsat = tables.get("MRSAT")
+    atts = None
+    if mrsat is not None:
+        attkey = "CUI" if load_on_cuis else "CODE"
+        # the reference filters CODE IS NOT NULL even when keying by
+        # CUI (mrsat_filt at umls2rdf.py:643); the key column is
+        # additionally non-null/non-empty so rows land on a class.
+        atts = mrsat.where(
+            (F.col("SAB") == ont_code)
+            & F.col("CODE").isNotNull()
+            & F.col(attkey).isNotNull()
+            & (F.col(attkey) != "")
+            & (F.col("ATN") != "AQ")
+        ).select(F.col(attkey).alias("code"), "ATN", "ATV")
+
+    # PAR rels are skipped; CHD rels are rdfs:subClassOf unless the MSH
+    # tree supplies the hierarchy (toRDF at umls2rdf.py:427-452)
+    emit_obj = F.col("REL") != "PAR"
+    if tree is None:
+        emit_obj = emit_obj & (F.col("REL") != "CHD")
+    return OntologyFrames(
+        tables, ont_code, lat, load_on_cuis, tree, atoms, src_rels, rels,
+        atts, emit_obj,
     )
 
 
@@ -188,100 +253,71 @@ def _fragment() -> Column:
 
 
 def term_blocks(
-    tables: dict[str, DataFrame],
-    ont_code: str,
-    ns: str,
-    lat: str = "eng",
-    load_on_cuis: bool = False,
-    hierarchy: bool = True,
-    tree: DataFrame | None = None,
-    dedupe: bool = True,
+    frames: OntologyFrames, ns: str, dedupe: bool = True
 ) -> DataFrame:
     """(code, ttl) — one rendered Turtle class block per code,
     byte-compatible with UmlsClass.toRDF (umls2rdf.py:391-490).
 
-    ``tree`` is the (parent, child) mesh tree for MSH-style exports
-    (tree parents emitted instead of CHD rels, hierarchy=False).
+    With ``frames.tree`` (MSH), tree parents are emitted instead of
+    CHD rels, and CHD rels render as object properties.
     """
-    lang = UMLS_LANGCODE_MAP[lat.lower()]
+    tables, atoms = frames.tables, frames.atoms
+    ont_code, load_on_cuis = frames.ont_code, frames.load_on_cuis
+    lang = UMLS_LANGCODE_MAP[frames.lat.lower()]
     mrconso = tables["MRCONSO"]
-    atoms = filter_atoms(mrconso, ont_code, lat, load_on_cuis)
     pref = pref_labels(
         atoms, tables.get("MRRANK", _empty_like(mrconso, "RANK SAB TTY SUPPRESS")),
         ont_code, load_on_cuis,
     )
-    roots = root_cuis(mrconso, ont_code)
-
-    # ── alt labels: sorted distinct STR != prefLabel ────────────────
-    alts = (
-        atoms.join(pref, "code")
-        .where(F.col("STR") != F.col("pref_label"))
-        .groupBy("code")
-        .agg(F.array_sort(F.collect_set("STR")).alias("alt_labels"))
-    )
+    alts = alt_labels(atoms, pref, ["code"], "STR", "pref_label")
 
     # ── definitions: join by AUI (code mode) / CUI (cuis mode) ─────
     mrdef = tables.get("MRDEF")
+    defs = None
     if mrdef is not None:
         defkey = "CUI" if load_on_cuis else "AUI"
-        defs = (
-            mrdef.where(F.col("SAB") == ont_code)
-            .join(
+        defs = collect_sorted_set(
+            mrdef.where(F.col("SAB") == ont_code).join(
                 atoms.select(defkey, "code").dropDuplicates([defkey, "code"]),
                 on=defkey,
-            )
-            .groupBy("code")
-            .agg(F.array_sort(F.collect_set("DEF")).alias("defs"))
+            ),
+            ["code"], "DEF", "defs",
         )
-    else:
-        defs = None
 
-    # ── relations: classified, ordered, rendered ────────────────────
-    rels = resolved_rels(tables["MRREL"], atoms, ont_code, load_on_cuis)
-    # root detection (umls2rdf.py:692-713): CHD rel whose CUI1 is a
+    # ── root detection (umls2rdf.py:692-713): CHD rel whose CUI1 is a
     # root CUI (code mode requires REL='CHD'; cuis mode any rel);
-    # ICD10CM's patched root parent included. Checked on the
-    # SOURCE-resolved rels — the reference tests root-ness before the
-    # target-code checks, so rels pointing at out-of-ontology atoms
-    # (the SRC hierarchy root itself) still count.
-    src_rels = source_resolved_rels(
-        tables["MRREL"], atoms, ont_code, load_on_cuis
+    # ICD10CM's patched root parent included ─────────────────────────
+    flagged = detect_roots(
+        frames.src_rels, root_cuis(mrconso, ont_code),
+        on=("CUI1", "root_cui"), flag_col="__root",
     )
-    root_cond = F.col("__is_root_cui").isNotNull()
+    root_cond = F.col("__root")
     if not load_on_cuis:
         root_cond = root_cond & (F.col("REL") == "CHD")
         if ont_code == "ICD10CM":
             root_cond = root_cond | (
                 (F.col("CUI1") == "C3264380") & (F.col("REL") == "CHD")
             )
-    rels_flagged = src_rels.join(
-        F.broadcast(roots.withColumn("__is_root_cui", F.lit(1))),
-        src_rels["CUI1"] == F.col("root_cui"),
-        "left",
-    )
-    is_root = rels_flagged.where(root_cond).select("code").distinct().withColumn(
+    is_root = flagged.where(root_cond).select("code").distinct().withColumn(
         "is_root", F.lit(True)
     )
 
+    # ── relations: classified, ordered, rendered ────────────────────
     emit_sub = (
         (F.col("REL") == "CHD")
-        & F.lit(hierarchy)
-        & F.lit(tree is None)
+        & F.lit(frames.tree is None)
         & ~F.col("target_code").isin(*BOGUS_PARENTS)
-    )
-    emit_obj = (F.col("REL") != "PAR") & ~(
-        (F.col("REL") == "CHD") & F.lit(hierarchy)
     )
     rendered_rel = F.when(
         emit_sub, subclass_triple(url_term(ns, F.col("target_code")))
     ).when(
-        emit_obj,
+        frames.emit_obj,
         object_triple(
             url_term(ns, _fragment()), url_term(ns, F.col("target_code"))
         ),
     )
     rel_segments = (
-        rels.withColumn("__seg", rendered_rel)
+        frames.rels.withColumn("__seg", rendered_rel)
         .where(F.col("__seg").isNotNull())
         .groupBy("code")
         .agg(
@@ -304,39 +340,26 @@ def term_blocks(
         )
     )
     # ── tree parents (MSH mesh tree, umls2rdf.py:423-426) ──────────
-    if tree is not None:
-        tree_segments = (
-            tree.groupBy(F.col("child").alias("code"))
-            .agg(F.array_sort(F.collect_set("parent")).alias("parents"))
-            .select(
-                "code",
-                F.transform(
-                    F.col("parents"), lambda p: subclass_triple(url_term(ns, p))
-                ).alias("tree_segs"),
-            )
+    tree_segments = None
+    if frames.tree is not None:
+        tree_segments = collect_sorted_set(
+            frames.tree.withColumnRenamed("child", "code"),
+            ["code"], "parent", "parents",
+        ).select(
+            "code",
+            F.transform(
+                F.col("parents"), lambda p: subclass_triple(url_term(ns, p))
+            ).alias("tree_segs"),
         )
-    else:
-        tree_segments = None
 
     # ── attributes (umls2rdf.py:457-474) ────────────────────────────
-    mrsat = tables.get("MRSAT")
-    if mrsat is not None:
-        attkey = "CUI" if load_on_cuis else "CODE"
-        # the reference filters CODE IS NOT NULL even when keying by
-        # CUI (mrsat_filt at umls2rdf.py:643); the key column is
-        # additionally non-null/non-empty so rows land on a class.
-        atts = mrsat.where(
-            (F.col("SAB") == ont_code)
-            & F.col("CODE").isNotNull()
-            & F.col(attkey).isNotNull()
-            & (F.col(attkey) != "")
-            & (F.col("ATN") != "AQ")
-        ).select(F.col(attkey).alias("code"), "ATN", "ATV")
-        atts = atts.join(
+    att_segments = None
+    if frames.atts is not None:
+        atts = frames.atts.join(
             atoms.select("code").distinct(), on="code", how="left_semi"
         )
         mn_root = (
-            F.lit(tree is not None)
+            F.lit(frames.tree is not None)
             & (F.col("ATN") == "MN")
             & F.col("code").startswith("D")
             & (F.size(F.split(F.col("ATV"), "\\.")) == 1)
@@ -370,77 +393,56 @@ def term_blocks(
                 ).alias("att_segs")
             )
         )
-    else:
-        att_segments = None
 
     # ── semantic types: CUIs + TUIs per code (umls2rdf.py:477-488) ──
-    cuis = atoms.groupBy("code").agg(
-        F.array_sort(F.collect_set("CUI")).alias("cuis")
-    )
+    cuis = collect_sorted_set(atoms, ["code"], "CUI", "cuis")
     mrsty = tables.get("MRSTY")
+    tuis = None
     if mrsty is not None:
-        tuis = (
+        tuis = collect_sorted_set(
             atoms.select("code", "CUI")
             .distinct()
-            .join(mrsty.select("CUI", "TUI").distinct(), on="CUI")
-            .groupBy("code")
-            .agg(F.array_sort(F.collect_set("TUI")).alias("tuis"))
+            .join(mrsty.select("CUI", "TUI").distinct(), on="CUI"),
+            ["code"], "TUI", "tuis",
         )
-    else:
-        tuis = None
 
     # ── assemble one row per code ───────────────────────────────────
+    arrays = {
+        "alt_labels": alts, "defs": defs, "rel_segs": rel_segments,
+        "tree_segs": tree_segments, "att_segs": att_segments,
+        "cuis": cuis, "tuis": tuis,
+    }
     base = pref
-    for part in (alts, defs, rel_segments, tree_segments, att_segments,
-                 cuis, tuis, is_root):
+    for part in (*arrays.values(), is_root):
         if part is not None:
             base = base.join(part, on="code", how="left")
     empty_arr = F.array().cast("array<string>")
-    base = (
-        base.withColumn("alt_labels", F.coalesce(F.col("alt_labels"), empty_arr))
-        .withColumn(
-            "defs",
-            F.coalesce(F.col("defs"), empty_arr) if defs is not None else empty_arr,
-        )
-        .withColumn("rel_segs", F.coalesce(F.col("rel_segs"), empty_arr))
-        .withColumn(
-            "tree_segs",
-            F.coalesce(F.col("tree_segs"), empty_arr)
-            if tree_segments is not None
-            else empty_arr,
-        )
-        .withColumn(
-            "att_segs",
-            F.coalesce(F.col("att_segs"), empty_arr)
-            if att_segments is not None
-            else empty_arr,
-        )
-        .withColumn("cuis", F.coalesce(F.col("cuis"), empty_arr))
-        .withColumn(
-            "tuis",
-            F.coalesce(F.col("tuis"), empty_arr) if tuis is not None else empty_arr,
-        )
-        .withColumn("is_root", F.coalesce(F.col("is_root"), F.lit(False)))
+    base = base.select(
+        "code",
+        "pref_label",
+        *[
+            (F.coalesce(F.col(c), empty_arr) if part is not None else empty_arr)
+            .alias(c)
+            for c, part in arrays.items()
+        ],
+        F.coalesce(F.col("is_root"), F.lit(False)).alias("is_root"),
     )
 
     url = url_term(ns, F.col("code"))
     header = class_header(url, F.col("pref_label"), F.col("code"), lang)
-    alt_part = F.when(
-        F.size("alt_labels") > 0,
-        F.concat(
-            F.lit("\tskos:altLabel "),
-            lang_literal_list(F.col("alt_labels"), lang),
-            F.lit(" ;\n"),
-        ),
-    ).otherwise(F.lit(""))
-    defs_part = F.when(
-        F.size("defs") > 0,
-        F.concat(
-            F.lit("\tskos:definition "),
-            lang_literal_list(F.col("defs"), lang),
-            F.lit(" ;\n"),
-        ),
-    ).otherwise(F.lit(""))
+
+    def labels(pred: str, col: str) -> Column:
+        return F.when(
+            F.size(col) > 0,
+            F.concat(
+                F.lit(f"\t{pred} "), lang_literal_list(F.col(col), lang),
+                F.lit(" ;\n"),
+            ),
+        ).otherwise(F.lit(""))
+
+    def lines(col: str, render) -> Column:
+        return F.concat_ws("", F.transform(F.col(col), render))
+
     root_arr = F.when(
         F.col("is_root"), F.array(F.lit(_OWL_THING_SUB))
     ).otherwise(empty_arr)
@@ -457,45 +459,21 @@ def term_blocks(
     root_part = F.when(F.col("is_root"), F.lit(_OWL_THING_SUB)).otherwise(
         F.lit("")
     )
-    cui_lines = F.concat_ws(
-        "",
-        F.transform(
-            F.col("cuis"),
-            lambda c: F.concat(
-                F.lit(f"\t{HAS_CUI} "), tq(c), F.lit("^^xsd:string ;\n")
-            ),
-        ),
-    )
-    tui_lines = F.concat_ws(
-        "",
-        F.transform(
-            F.col("tuis"),
-            lambda t: F.concat(
-                F.lit(f"\t{HAS_TUI} "), tq(t), F.lit("^^xsd:string ;\n")
-            ),
-        ),
-    )
-    # hasSTY objects use get_umls_url("STY") = UMLS_BASE_URI + "STY/"
-    # (umls2rdf.py:488, conf UMLS_BASE_URI), not the bioportal prefix.
-    sty_ns = "http://purl.bioontology.org/ontology/STY/"
-    sty_lines = F.concat_ws(
-        "",
-        F.transform(
-            F.col("tuis"),
-            lambda t: F.concat(
-                F.lit(f"\t{HAS_STY} <{sty_ns}"), t, F.lit("> ;\n")
-            ),
-        ),
-    )
     block = F.concat(
         header,
-        alt_part,
+        labels("skos:altLabel", "alt_labels"),
         root_part,
-        defs_part,
+        labels("skos:definition", "defs"),
         F.concat_ws("", tail),
-        cui_lines,
-        tui_lines,
-        sty_lines,
+        lines("cuis", lambda c: F.concat(
+            F.lit(f"\t{HAS_CUI} "), tq(c), F.lit("^^xsd:string ;\n")
+        )),
+        lines("tuis", lambda t: F.concat(
+            F.lit(f"\t{HAS_TUI} "), tq(t), F.lit("^^xsd:string ;\n")
+        )),
+        lines("tuis", lambda t: F.concat(
+            F.lit(f"\t{HAS_STY} <{STY_NS}"), t, F.lit("> ;\n")
+        )),
         F.lit(" .\n\n"),
     )
     return base.select("code", block.alias("ttl"))
@@ -505,18 +483,17 @@ def mesh_tree(mrrel: DataFrame, mrconso: DataFrame) -> DataFrame:
     """MSH parent/child code pairs (mesh_tree at umls2rdf.py:201-217):
     MRREL CHD rows joined through MRCONSO on both CUIs, D-codes only,
     distinct."""
-    rels = mrrel.where((F.col("SAB") == "MSH") & (F.col("REL") == "CHD"))
-    c1 = mrconso.where(
+    d_codes = mrconso.where(
         (F.col("SAB") == "MSH") & F.col("CODE").startswith("D")
-    ).select(F.col("CUI").alias("__pcui"), F.col("CODE").alias("parent"))
-    c2 = mrconso.where(
-        (F.col("SAB") == "MSH") & F.col("CODE").startswith("D")
-    ).select(F.col("CUI").alias("__ccui"), F.col("CODE").alias("child"))
-    return (
-        rels.join(c1, rels["CUI1"] == F.col("__pcui"))
-        .join(c2, rels["CUI2"] == F.col("__ccui"))
-        .select("parent", "child")
-        .distinct()
+    )
+    return tree_edges(
+        mrrel.where((F.col("SAB") == "MSH") & (F.col("REL") == "CHD")),
+        d_codes.select(F.col("CUI").alias("__pcui"), F.col("CODE").alias("parent")),
+        d_codes.select(F.col("CUI").alias("__ccui"), F.col("CODE").alias("child")),
+        on_left=("CUI1", "__pcui"),
+        on_right=("CUI2", "__ccui"),
+        parent_out=F.col("parent"),
+        child_out=F.col("child"),
     )
 
 
@@ -530,10 +507,9 @@ def semantic_types_lines(
     Returns (sort_key, line); order by sort_key for a deterministic
     document (the reference emits in DB scan order).
     """
-    sty_url = "http://purl.bioontology.org/ontology/STY/"
     nodes = mrsty.select("TUI", "STN", "STY").distinct()
     term_line = F.concat(
-        F.lit(f"<{sty_url}"), F.col("TUI"),
+        F.lit(f"<{STY_NS}"), F.col("TUI"),
         F.lit("> a owl:Class ;\n\tskos:notation \""), F.col("TUI"),
         F.lit("\"^^xsd:string ;\n\tskos:prefLabel \""), F.col("STY"),
         F.lit("\"@en .\n"),
@@ -542,43 +518,29 @@ def semantic_types_lines(
         F.concat(F.lit("0:"), F.col("TUI")).alias("sort_key"),
         term_line.alias("line"),
     )
-    parent_stn = F.when(
-        F.col("STN").contains("."),
-        F.regexp_replace(F.col("STN"), "\\.[^.]*$", ""),
-    ).otherwise(F.expr("substring(STN, 1, length(STN) - 1)"))
     child = nodes.select(
         F.col("TUI").alias("child_tui"),
-        F.col("STN").alias("child_stn"),
-        parent_stn.alias("parent_stn"),
+        prefix_parent(F.col("STN")).alias("parent_stn"),
     )
     parent = nodes.select(
         F.col("TUI").alias("parent_tui"), F.col("STN").alias("p_stn")
     )
-    edges = (
-        child.join(parent, child["parent_stn"] == parent["p_stn"], "left")
-        .where(
-            F.col("parent_tui").isNotNull()
-            & (F.col("parent_tui") != F.col("child_tui"))
-        )
-        .select(
-            F.concat(
-                F.lit("1:"), F.col("child_tui"), F.lit(":"), F.col("parent_tui")
-            ).alias("sort_key"),
-            F.concat(
-                F.lit(f"<{sty_url}"), F.col("child_tui"),
-                F.lit(f"> rdfs:subClassOf <{sty_url}"), F.col("parent_tui"),
-                F.lit("> ."),
-            ).alias("line"),
-        )
+    pairs = child.join(parent, child["parent_stn"] == parent["p_stn"]).where(
+        F.col("parent_tui") != F.col("child_tui")
+    )
+    edges = pairs.select(
+        F.concat(
+            F.lit("1:"), F.col("child_tui"), F.lit(":"), F.col("parent_tui")
+        ).alias("sort_key"),
+        F.concat(
+            F.lit(f"<{STY_NS}"), F.col("child_tui"),
+            F.lit(f"> rdfs:subClassOf <{STY_NS}"), F.col("parent_tui"),
+            F.lit("> ."),
+        ).alias("line"),
     )
     out = terms.unionByName(edges)
     if with_roots:
-        has_parent = (
-            child.join(parent, child["parent_stn"] == parent["p_stn"], "inner")
-            .where(F.col("parent_tui") != F.col("child_tui"))
-            .select(F.col("child_tui").alias("TUI"))
-            .distinct()
-        )
+        has_parent = pairs.select(F.col("child_tui").alias("TUI")).distinct()
         root_lines = (
             nodes.join(has_parent, on="TUI", how="left_anti")
             .select(
@@ -586,7 +548,7 @@ def semantic_types_lines(
                     "sort_key"
                 ),
                 F.concat(
-                    F.lit(f"<{sty_url}"), F.col("TUI"),
+                    F.lit(f"<{STY_NS}"), F.col("TUI"),
                     F.lit("> rdfs:subClassOf owl:Thing ."),
                 ).alias("line"),
             )
@@ -595,38 +557,19 @@ def semantic_types_lines(
     return out
 
 
-def used_properties(
-    tables: dict[str, DataFrame],
-    ont_code: str,
-    lat: str = "eng",
-    load_on_cuis: bool = False,
-    hierarchy: bool = True,
-) -> DataFrame:
+def used_properties(frames: OntologyFrames) -> DataFrame:
     """Distinct property names an export will emit: object-property
     fragments from rels + datatype ATNs from atts (the ont_properties
     dict the reference accumulates per term, umls2rdf.py:453-474).
     Returns (att) one column."""
-    atoms = filter_atoms(tables["MRCONSO"], ont_code, lat, load_on_cuis)
-    rels = resolved_rels(tables["MRREL"], atoms, ont_code, load_on_cuis)
-    emit_obj = (F.col("REL") != "PAR") & ~(
-        (F.col("REL") == "CHD") & F.lit(hierarchy)
-    )
-    frags = rels.where(emit_obj).select(_fragment().alias("att")).distinct()
-    mrsat = tables.get("MRSAT")
-    if mrsat is None:
-        return frags
-    attkey = "CUI" if load_on_cuis else "CODE"
-    atns = (
-        mrsat.where(
-            (F.col("SAB") == ont_code)
-            & F.col("CODE").isNotNull()  # umls2rdf.py:643, both modes
-            & F.col(attkey).isNotNull()
-            & (F.col(attkey) != "")
-            & (F.col("ATN") != "AQ")
-        )
-        .select(F.col("ATN").alias("att"))
+    frags = (
+        frames.rels.where(frames.emit_obj)
+        .select(_fragment().alias("att"))
         .distinct()
     )
+    if frames.atts is None:
+        return frags
+    atns = frames.atts.select(F.col("ATN").alias("att")).distinct()
     return frags.unionByName(atns).distinct()
 
 
@@ -687,19 +630,22 @@ def write_ontology(
     ont_code: str,
     ns: str,
     output_dir: str,
+    mrsab_row: dict | None,
     lat: str = "eng",
     load_on_cuis: bool = False,
-    include_semantic_types: bool = True,
     umls_version: str = "2025AB",
     ordered: bool = True,
 ) -> None:
     """Full document export (write_into at umls2rdf.py:745-789):
     prefixes + ontology header + class blocks + property declarations
-    (+ semantic types), written with ``df.write.text`` — per-partition
+    + semantic types, written with ``df.write.text`` — per-partition
     streaming writes, no driver collect, so a 100 TB export writes at
     cluster width. Blocks are ordered by code (the reference emits in
     dict-insertion order, which is DB-scan order — not reproducible;
     RDF semantics are order-free).
+
+    ``mrsab_row`` is the ontology's :func:`mrsab_record` (or None),
+    rendered into the header.
 
     ``ordered=True`` (default) totally orders the document — stable
     byte-identical output, but a full range-partitioning Exchange
@@ -708,54 +654,39 @@ def write_ontology(
     part file is still internally tidy and the triple SET is
     identical; use it for 100 TB exports where a global sort of the
     document text would dominate the job."""
-    from umls2rdf_spark.rdf.turtle import PREFIXES
-
     spark = tables["MRCONSO"].sparkSession
-    hierarchy = ont_code != "MSH"
     tree = (
         mesh_tree(tables["MRREL"], tables["MRCONSO"])
         if ont_code == "MSH"
         else None
     )
-    rec = (
-        mrsab_record(tables["MRSAB"], ont_code)
-        if "MRSAB" in tables
-        else None
-    )
-    head = PREFIXES + ontology_header(rec, ont_code, ns, umls_version)
-    head_df = spark.createDataFrame([("0", head)], "sort string, ttl string")
-    blocks = term_blocks(
-        tables, ont_code, ns, lat=lat, load_on_cuis=load_on_cuis,
-        hierarchy=hierarchy, tree=tree,
-    ).select(F.concat(F.lit("1:"), F.col("code")).alias("sort"), "ttl")
-    parts = [head_df, blocks]
-    # hasSTY ObjectProperty declaration first in the property section
-    # (write_properties, umls2rdf.py:801-811): sort key "2" < "2:…".
-    parts.append(
+    frames = ontology_frames(tables, ont_code, lat, load_on_cuis, tree)
+    head = PREFIXES + ontology_header(mrsab_row, ont_code, ns, umls_version)
+    parts = [
+        # hasSTY ObjectProperty declaration first in the property
+        # section (write_properties, umls2rdf.py:801-811): "2" < "2:…"
         spark.createDataFrame(
-            [("2", HASSTY_PROPERTY_BLOCK)], "sort string, ttl string"
-        )
-    )
+            [("0", head), ("2", HASSTY_PROPERTY_BLOCK)],
+            "sort string, ttl string",
+        ),
+        term_blocks(frames, ns).select(
+            F.concat(F.lit("1:"), F.col("code")).alias("sort"), "ttl"
+        ),
+    ]
     if "MRDOC" in tables:
-        props = used_properties(
-            tables, ont_code, lat=lat, load_on_cuis=load_on_cuis,
-            hierarchy=hierarchy,
-        )
         parts.append(
-            property_blocks(tables["MRDOC"], props, ns).select(
+            property_blocks(tables["MRDOC"], used_properties(frames), ns).select(
                 F.concat(F.lit("2:"), F.col("att")).alias("sort"), "ttl"
             )
         )
-    if include_semantic_types and "MRSTY" in tables:
+    if "MRSTY" in tables:
         parts.append(
             semantic_types_lines(tables["MRSTY"], with_roots=False).select(
                 F.concat(F.lit("3:"), F.col("sort_key")).alias("sort"),
                 F.col("line").alias("ttl"),
             )
         )
-    doc = parts[0]
-    for p in parts[1:]:
-        doc = doc.unionByName(p)
+    doc = reduce(DataFrame.unionByName, parts)
     assemble_document(doc, ordered).write.mode("overwrite").text(output_dir)
 
 
@@ -787,7 +718,6 @@ def ontology_header(
     """Ontology header block (ONTOLOGY_HEADER at umls2rdf.py:30,
     write_into at umls2rdf.py:750-762). MRSAB is a one-row lookup —
     driver-side string assembly, not a Spark job."""
-    from umls2rdf_spark.rdf.turtle import PREFIXES  # noqa: F401
 
     def esc(s: str) -> str:
         return s.replace("\\", "\\\\").replace('"', '\\"')

@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from umls2rdf_spark.functions.hashing import stable_hash40
+from umls2rdf_spark.plans.crawl_pipeline import cached_relation
 from umls2rdf_spark.streaming.events import minhash_epoch
 from umls2rdf_spark.streaming.webcurate import (
     domain_cap_epoch,
@@ -117,7 +118,7 @@ def crawl_epoch(
         out = df.persist()
         counts[name] = out.count()
         cached.append(out)
-        return out
+        return cached_relation(out)
 
     # stateless front — the batch pipeline's stages 1-4, verbatim
     resp = warc_responses(parse_warc_chunks(batch_df))
