@@ -6,8 +6,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-from umls2rdf_spark.operators.grouping import alt_labels, collect_sorted_set
-from umls2rdf_spark.operators.ranking import cascade_order, top1_per_group
+from umls2rdf_spark.operators.grouping import (
+    alt_labels,
+    collect_sorted_set,
+    sorted_set,
+)
+from umls2rdf_spark.operators.ranking import (
+    cascade_order,
+    rank_order,
+    top1_per_group,
+    top1_value,
+)
 from umls2rdf_spark.operators.textstats import split_assign
 
 
@@ -23,15 +32,23 @@ def test_collect_sorted_set_and_alt_labels(spark):
     }
     assert collected["K1"] == ["Alt A", "Alt B", "Pref"]
 
-    pref = spark.createDataFrame(
-        [("K1", "Pref"), ("K2", "Only")], "code string, pref_label string"
+    # the export's fused rule: preferred label and label set from one
+    # aggregation, alt labels = the set without the preferred label
+    pref = F.col("label").isin("Pref", "Only")
+    fused = atoms.groupBy("code").agg(
+        top1_value(F.col("label"), cascade_order(pref)).alias("pref_label"),
+        sorted_set("label").alias("labels"),
+    ).select(
+        "code", alt_labels(F.col("labels"), F.col("pref_label")).alias("alts")
     )
-    alts = {
-        r["code"]: r["alt_labels"]
-        for r in alt_labels(atoms, pref, ["code"], "label", "pref_label").collect()
-    }
+    alts = {r["code"]: r["alts"] for r in fused.collect()}
     assert alts["K1"] == ["Alt A", "Alt B"]
-    assert "K2" not in alts  # no non-preferred labels → no row
+    assert alts["K2"] == []  # its only label is the preferred one
+    # a NULL preferred label removes nothing and yields NULL
+    null_pref = spark.range(1).select(
+        alt_labels(F.array(F.lit("x")), F.lit(None).cast("string")).alias("a")
+    )
+    assert null_pref.collect()[0]["a"] is None
 
 
 def test_cascade_order_semantics(spark):
@@ -1245,15 +1262,10 @@ def test_ccnet_buckets_matches_oracle_and_thirds(spark, duck):
     assert by_bucket["head"] < by_bucket["middle"] < by_bucket["tail"]
 
 
-def test_top1_per_group_agg_matches_window(spark):
-    """The argmin/argmax aggregation form (round 10) is row-identical
-    to the window top-1 on every ordering family the demos use:
-    all-ascending (min_by struct), descending-major with a negated
-    ascending minor (max_by), and a NULL-able max_by leading field
-    (struct comparison puts NULL first = smallest, i.e. the window's
-    DESC NULLS LAST)."""
-    from umls2rdf_spark.operators.ranking import top1_per_group_agg
-
+def test_top1_per_group_orderings(spark):
+    """One row per group under the ordering families the export and
+    the demos use: all-ascending, max-rank-wins with a NULL rank
+    losing (:func:`rank_order`), and a negated numeric minor key."""
     df = spark.createDataFrame(
         [
             (1, 10, 5, "a"),
@@ -1265,30 +1277,19 @@ def test_top1_per_group_agg_matches_window(spark):
         ],
         "g int, rank int, key int, payload string",
     )
-    # all-ascending: (key asc) under min_by
-    w = top1_per_group(
-        df, ["g"], [F.col("key").asc(), F.col("payload").asc()]
-    )
-    a = top1_per_group_agg(
-        df,
-        ["g"],
-        F.struct(F.col("key").alias("k"), F.col("payload").alias("p")),
-    )
-    assert sorted(map(tuple, w.collect())) == sorted(map(tuple, a.collect()))
-    # descending-major with negated ascending minor; NULL rank loses
-    # (window: rank DESC NULLS LAST, key ASC)
-    w2 = top1_per_group(
-        df, ["g"], [F.col("rank").desc_nulls_last(), F.col("key").asc()]
-    )
-    a2 = top1_per_group_agg(
-        df,
-        ["g"],
-        F.struct(
-            F.col("rank").alias("r"),
-            (-F.col("key").cast("decimal(20,0)")).alias("nk"),
-        ),
-        use_max=True,
-    )
-    assert sorted(map(tuple, w2.collect())) == sorted(
-        map(tuple, a2.collect())
-    )
+
+    def top(order):
+        return sorted(map(tuple, top1_per_group(df, ["g"], order).collect()))
+
+    # all-ascending: (key, payload)
+    assert top([F.col("key"), F.col("payload")]) == [
+        (1, 7, 1, "c"), (2, 4, 2, "e"), (3, None, 1, "f"),
+    ]
+    # rank DESC NULLS LAST, then key ASC
+    assert top(rank_order(F.col("rank"), [F.col("key")])) == [
+        (1, 10, 3, "b"), (2, 4, 2, "e"), (3, None, 1, "f"),
+    ]
+    # rank DESC NULLS LAST, then key DESC through negation
+    assert top(rank_order(F.col("rank"), [-F.col("key")])) == [
+        (1, 10, 5, "a"), (2, 4, 2, "e"), (3, None, 1, "f"),
+    ]

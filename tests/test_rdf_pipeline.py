@@ -16,7 +16,9 @@ from umls2rdf_spark.rdf.ontology import (
     semantic_types_lines,
     term_blocks,
 )
-from umls2rdf_spark.schemas import MRCONSO, MRDEF, MRREL, MRSAB, MRSAT, MRSTY
+from umls2rdf_spark.schemas import (
+    MRCONSO, MRDEF, MRRANK, MRREL, MRSAB, MRSAT, MRSTY,
+)
 
 NS = "http://example.org/test"
 
@@ -411,3 +413,30 @@ def test_root_detected_via_unresolvable_src_parent(spark):
         ).collect()
     }
     assert "rdfs:subClassOf owl:Thing ;" in blocks["R1"]
+
+
+# ── plan shape: the preferred label, alt labels and CUIs come from one
+# min_by aggregation per code, so no window sorts the atoms ─────────
+@pytest.mark.parametrize("load_on_cuis", [False, True])
+def test_term_blocks_plan_has_no_window(spark, load_on_cuis):
+    tables = tables_from(
+        spark,
+        atoms=[
+            make_atom("C1", "Label 1", tty="PT", aui="A1", code="K1"),
+            make_atom("C1", "Label 2", tty="SY", aui="A2", code="K1"),
+            make_atom("C2", "Label 3", tty="PT", aui="A3", code="K2"),
+        ],
+        rels=[make_rel("C1", "C2", "CHD", source_aui="A1", target_aui="A3")],
+        stys=[make_sty("C1", "T001")],
+    )
+    tables["MRRANK"] = spark.createDataFrame(
+        [_row(MRRANK, RANK="2", SAB="TEST", TTY="PT"),
+         _row(MRRANK, RANK="1", SAB="TEST", TTY="SY")],
+        MRRANK,
+    )
+    blocks = term_blocks(
+        ontology_frames(tables, "TEST", load_on_cuis=load_on_cuis), NS
+    )
+    assert len(blocks.collect()) == 2
+    plan = blocks._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan

@@ -5,8 +5,10 @@ defs_by_aui / atts_by_code ... umls2rdf.py:545-557) and walks them on
 the driver. Spark shape: ``groupBy(key).agg(collect_*)`` — partial
 aggregation map-side, one shuffle on the key, arrays stay distributed.
 
-Callers: the Turtle export (``rdf.ontology.term_blocks``) builds its
-alt labels with :func:`alt_labels` and its definition, CUI, TUI and
+Callers: the Turtle export (``rdf.ontology.term_blocks``) takes a
+class's labels and CUIs as :func:`sorted_set` aggregates in the same
+per-code aggregation as its preferred label, derives the alt labels
+from them with :func:`alt_labels`, and builds its definition, TUI and
 mesh-tree parent arrays with :func:`collect_sorted_set`.
 """
 
@@ -18,19 +20,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def sorted_set(value: str | Column) -> Column:
+    """Aggregate: the group's distinct non-NULL values as a sorted
+    array (deterministic — the reference relies on ``sorted(set(...))``
+    the same way, e.g. altLabels at umls2rdf.py:410-412)."""
+    value = F.col(value) if isinstance(value, str) else value
+    return F.array_sort(F.collect_set(value))
+
+
 def collect_sorted_set(
     df: DataFrame,
     group_cols: Sequence[str],
     value_col: str | Column,
     out_col: str = "values",
 ) -> DataFrame:
-    """Distinct values per group as a sorted array (deterministic —
-    the reference relies on ``sorted(set(...))`` the same way, e.g.
-    altLabels at umls2rdf.py:410-412)."""
-    value = F.col(value_col) if isinstance(value_col, str) else value_col
-    return df.groupBy(*group_cols).agg(
-        F.array_sort(F.collect_set(value)).alias(out_col)
-    )
+    """:func:`sorted_set` per group."""
+    return df.groupBy(*group_cols).agg(sorted_set(value_col).alias(out_col))
 
 
 def string_agg_sorted(
@@ -39,29 +44,15 @@ def string_agg_sorted(
     value_col: str | Column,
     sep: str = ",",
     out_col: str = "agg",
-    distinct: bool = True,
 ) -> DataFrame:
-    """Sorted (optionally distinct) string aggregation per group —
-    the join-ready form of collect_sorted_set (altLabel ' , ' lists,
-    definition lists: umls2rdf.py:410-419)."""
-    value = F.col(value_col) if isinstance(value_col, str) else value_col
-    arr = F.collect_set(value) if distinct else F.collect_list(value)
+    """:func:`sorted_set` per group joined into one string (altLabel
+    ' , ' lists, definition lists: umls2rdf.py:410-419)."""
     return df.groupBy(*group_cols).agg(
-        F.concat_ws(sep, F.array_sort(arr)).alias(out_col)
+        F.concat_ws(sep, sorted_set(value_col)).alias(out_col)
     )
 
 
-def alt_labels(
-    atoms: DataFrame,
-    pref: DataFrame,
-    group_cols: Sequence[str],
-    label_col: str,
-    pref_label_col: str,
-    out_col: str = "alt_labels",
-) -> DataFrame:
-    """altLabels = all labels per group except the preferred one
-    (umls2rdf.py:291-293): join the pref row back and filter before
-    collecting — the filter runs pre-shuffle."""
-    joined = atoms.join(pref.select(*group_cols, pref_label_col), on=list(group_cols))
-    filtered = joined.where(F.col(label_col) != F.col(pref_label_col))
-    return collect_sorted_set(filtered, group_cols, label_col, out_col)
+def alt_labels(labels: Column, pref_label: Column) -> Column:
+    """altLabels = a group's sorted label set without its preferred
+    label (umls2rdf.py:291-293); NULL when ``pref_label`` is NULL."""
+    return F.array_remove(labels, pref_label)

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from umls2rdf_spark.operators.ranking import top1_per_group_agg
+from umls2rdf_spark.operators.ranking import top1_per_group
 from umls2rdf_spark.operators.sessionize import asof_join_auto, session_counts
 from umls2rdf_spark.sources.parquet import load_table
 
@@ -19,18 +19,9 @@ def top_customer_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = cust.join(
         F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
     )
-    # argmax form (guide §2.3: map-side partial top-1): larger
-    # acctbal wins (desc = max; both columns non-null TPC-H keys),
-    # then smaller custkey via exact decimal negation — identical to
-    # the window order (c_acctbal DESC, c_custkey ASC)
-    best = top1_per_group_agg(
-        joined,
-        ["n_name"],
-        F.struct(
-            F.col("c_acctbal").alias("__b"),
-            (-F.col("c_custkey").cast("decimal(20,0)")).alias("__k"),
-        ),
-        use_max=True,
+    # larger acctbal wins (negated), then smaller custkey
+    best = top1_per_group(
+        joined, ["n_name"], [-F.col("c_acctbal"), F.col("c_custkey")]
     )
     return best.select("n_name", "c_custkey", "c_acctbal")
 

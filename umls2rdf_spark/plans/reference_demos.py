@@ -22,8 +22,9 @@ from umls2rdf_spark.operators.hierarchy import (
     tree_edges,
 )
 from umls2rdf_spark.operators.ranking import (
+    cascade_order,
     ranked_top1,
-    top1_per_group_agg,
+    top1_per_group,
 )
 from umls2rdf_spark.operators.triples import dedupe_triples, triple_gen
 from umls2rdf_spark.sources.parquet import load_table
@@ -91,14 +92,8 @@ def demo_ranked_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_cols=["o_custkey"],
         join_on="o_orderpriority",
         rank_col="rank",
-        # argmax form (guide §2.3: map-side partial top-1, no pair
-        # sort): larger price wins, then smaller orderkey (exact
-        # decimal negation); row-identical to the window order
-        # (rank DESC NULLS LAST, price DESC, orderkey ASC)
-        tiebreak_agg=[
-            F.col("o_totalprice"),
-            -F.col("o_orderkey").cast("decimal(20,0)"),
-        ],
+        # larger price wins (negated), then smaller orderkey
+        tiebreak=[-F.col("o_totalprice"), F.col("o_orderkey")],
     )
     return best.select(
         "o_custkey",
@@ -127,20 +122,15 @@ WHERE rn = 1
 def tiebreak_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per nation pick one customer through a preference cascade."""
     cust = load_table(spark, sf_dir, "customer")
-    # all-ascending total order -> straight min_by struct (argmin
-    # form, guide §2.3); the same 0/1 cascade levels cascade_order
-    # builds, as plain value expressions (a struct field cannot be a
-    # SortOrder) — identical to the window cascade
-    chosen = top1_per_group_agg(
+    chosen = top1_per_group(
         cust,
         ["c_nationkey"],
-        F.struct(
-            F.when(F.col("c_mktsegment") == "BUILDING", 0)
-            .otherwise(1)
-            .alias("__l0"),
-            F.when(F.col("c_acctbal") >= 5000, 0).otherwise(1).alias("__l1"),
-            F.col("c_custkey").alias("__k"),
-        ),
+        [
+            *cascade_order(
+                F.col("c_mktsegment") == "BUILDING", F.col("c_acctbal") >= 5000
+            ),
+            F.col("c_custkey"),
+        ],
     )
     return chosen.select("c_nationkey", "c_custkey", "c_name")
 
@@ -417,17 +407,14 @@ FROM documents
 # ── A15 first_match_priority (MRSAB CURVER='Y' preference) ─────────
 def first_match_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    # all-ascending total order -> argmin form (guide §2.3)
-    first = top1_per_group_agg(
+    first = top1_per_group(
         orders,
         ["o_custkey"],
-        F.struct(
-            F.when(F.col("o_orderstatus") == "O", 0)
-            .otherwise(1)
-            .alias("__p"),
-            F.col("o_orderdate").alias("__d"),
-            F.col("o_orderkey").alias("__k"),
-        ),
+        [
+            *cascade_order(F.col("o_orderstatus") == "O"),
+            F.col("o_orderdate"),
+            F.col("o_orderkey"),
+        ],
     )
     return first.select(
         "o_custkey",

@@ -3,24 +3,25 @@
 This is the Spark rebuild of the reference's whole pipeline
 (UmlsOntology at umls2rdf.py:536, UmlsClass.toRDF at umls2rdf.py:391):
 the reference loads every table into driver RAM and loops over codes;
-here each per-class component (preferred label, alt labels,
-definitions, resolved relations, attributes, semantic types, root
-flags) is an independent aggregation joined on the class code, and the
-Turtle block is rendered by a single projection.
+here each per-class component (labels, definitions, resolved
+relations, attributes, semantic types, root flags) is an aggregation
+keyed by the class code, joined on it, and the Turtle block is
+rendered by a single projection.
 
 Each UMLS rule is the ``operators/`` function whose ``queries()`` demo
-is checked against DuckDB: the preferred label is
-``ranking.ranked_top1`` / ``top1_per_group``, alt labels and sorted
-sets are ``grouping``, the mesh tree, the STN parent and the root flag
-are ``hierarchy``. :func:`ontology_frames` builds an ontology's shared
-frames (atom scan, AUI bridge, resolved rels, MRSAT rows, the
-object-property rule) once; the class blocks and the property list
-both derive from them.
+is checked against DuckDB: the preferred label is the ``ranking``
+top-1 (``top1_value`` over ``rank_order`` or ``cascade_order``), alt
+labels and sorted sets are ``grouping``, the mesh tree, the STN parent
+and the root flag are ``hierarchy``. The preferred label, the alt
+labels and the CUIs come from one aggregation per code.
+:func:`ontology_frames` builds an ontology's shared frames (atom scan,
+AUI bridge, resolved rels, MRSAT rows, the object-property rule) once;
+the class blocks and the property list both derive from them.
 
 Plan shape, measured on a 4-core local session over a seeded
-4000-concept SNOMEDCT_US release: the class-block plan holds 19 hash
-Exchanges, 13 broadcast Exchanges and 18 CSV scans before AQE
-re-plans it.
+4000-concept SNOMEDCT_US release: the class-block plan holds 15 hash
+Exchanges, 10 broadcast Exchanges, no Window and 14 CSV scans (8 of
+MRCONSO, 1 of MRRANK) before AQE re-plans it.
 
 Rendering mirrors the reference byte-for-byte where the reference is
 deterministic; where it depends on MySQL row order (tie-breaks among
@@ -37,7 +38,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from umls2rdf_spark.functions.text import UMLS_LANGCODE_MAP, url_term
-from umls2rdf_spark.operators.grouping import alt_labels, collect_sorted_set
+from umls2rdf_spark.operators.grouping import (
+    alt_labels,
+    collect_sorted_set,
+    sorted_set,
+)
 from umls2rdf_spark.operators.hierarchy import (
     detect_roots,
     prefix_parent,
@@ -45,8 +50,8 @@ from umls2rdf_spark.operators.hierarchy import (
 )
 from umls2rdf_spark.operators.ranking import (
     cascade_order,
-    ranked_top1,
-    top1_per_group,
+    rank_order,
+    top1_value,
 )
 from umls2rdf_spark.rdf.turtle import (
     HAS_CUI,
@@ -107,46 +112,6 @@ def root_cuis(mrconso: DataFrame, ont_code: str) -> DataFrame:
     return mrconso.where(
         (F.col("SAB") == "SRC") & (F.col("CODE") == f"V-{ont_code}")
     ).select(F.col("CUI").alias("root_cui"))
-
-
-def pref_labels(
-    atoms: DataFrame, mrrank: DataFrame, ont_code: str, load_on_cuis: bool
-) -> DataFrame:
-    """One preferred label per code.
-
-    Code mode (umls2rdf.py:320-332): max MRRANK rank wins, fallback
-    'P' in TTY. Cuis mode (umls2rdf.py:295-319): ISPREF='Y' →
-    STT='PF' → TTY starts with 'P' cascade. Both collapse to one
-    window top-1 with a multi-key ordering; AUI breaks the ties the
-    reference leaves to MySQL row order.
-    """
-    if load_on_cuis:
-        order = cascade_order(
-            F.col("ISPREF") == "Y",
-            F.col("STT") == "PF",
-            F.col("TTY").startswith("P"),
-        )
-        top = top1_per_group(atoms, ["code"], [*order, F.col("AUI").asc()])
-    else:
-        rank_dim = (
-            mrrank.where(F.col("SAB") == ont_code)
-            .select(
-                F.col("TTY"), F.col("RANK").cast("int").alias("tty_rank")
-            )
-            # guard: a duplicated (SAB, TTY) rank row must not fan out
-            # the atom side through the join (the reference indexes
-            # rank_by_tty[tty][0], i.e. first row wins)
-            .groupBy("TTY")
-            .agg(F.max("tty_rank").alias("tty_rank"))
-        )
-        top = ranked_top1(
-            atoms, rank_dim, ["code"], join_on="TTY", rank_col="tty_rank",
-            tiebreak=[
-                *cascade_order(F.col("TTY").contains("P")),
-                F.col("AUI").asc(),
-            ],
-        )
-    return top.select("code", F.col("STR").alias("pref_label"))
 
 
 @dataclass(frozen=True)
@@ -265,11 +230,52 @@ def term_blocks(
     ont_code, load_on_cuis = frames.ont_code, frames.load_on_cuis
     lang = UMLS_LANGCODE_MAP[frames.lat.lower()]
     mrconso = tables["MRCONSO"]
-    pref = pref_labels(
-        atoms, tables.get("MRRANK", _empty_like(mrconso, "RANK SAB TTY SUPPRESS")),
-        ont_code, load_on_cuis,
+
+    # ── labels and CUIs: one aggregation per code ───────────────────
+    # Preferred label. Cuis mode (umls2rdf.py:295-319): ISPREF='Y' →
+    # STT='PF' → TTY starts with 'P' cascade. Code mode
+    # (umls2rdf.py:320-332): max MRRANK rank wins, fallback 'P' in
+    # TTY. AUI breaks the ties the reference leaves to MySQL row order.
+    ranked = atoms
+    if load_on_cuis:
+        order = [
+            *cascade_order(
+                F.col("ISPREF") == "Y",
+                F.col("STT") == "PF",
+                F.col("TTY").startswith("P"),
+            ),
+            F.col("AUI"),
+        ]
+    else:
+        mrrank = tables.get("MRRANK")
+        if mrrank is None:
+            ranked = atoms.withColumn("tty_rank", F.lit(None).cast("int"))
+        else:
+            rank_dim = (
+                mrrank.where(F.col("SAB") == ont_code)
+                .select(
+                    F.col("TTY"), F.col("RANK").cast("int").alias("tty_rank")
+                )
+                # guard: a duplicated (SAB, TTY) rank row must not fan
+                # out the atom side through the join (the reference
+                # indexes rank_by_tty[tty][0], i.e. first row wins)
+                .groupBy("TTY")
+                .agg(F.max("tty_rank").alias("tty_rank"))
+            )
+            ranked = atoms.join(F.broadcast(rank_dim), on="TTY", how="left")
+        order = rank_order(
+            F.col("tty_rank"),
+            [*cascade_order(F.col("TTY").contains("P")), F.col("AUI")],
+        )
+    per_code = ranked.groupBy("code").agg(
+        top1_value(F.col("STR"), order).alias("pref_label"),
+        sorted_set("STR").alias("labels"),
+        sorted_set("CUI").alias("cuis"),
+    ).select(
+        "code", "pref_label",
+        alt_labels(F.col("labels"), F.col("pref_label")).alias("alt_labels"),
+        "cuis",
     )
-    alts = alt_labels(atoms, pref, ["code"], "STR", "pref_label")
 
     # ── definitions: join by AUI (code mode) / CUI (cuis mode) ─────
     mrdef = tables.get("MRDEF")
@@ -394,8 +400,7 @@ def term_blocks(
             )
         )
 
-    # ── semantic types: CUIs + TUIs per code (umls2rdf.py:477-488) ──
-    cuis = collect_sorted_set(atoms, ["code"], "CUI", "cuis")
+    # ── semantic types: TUIs per code (umls2rdf.py:477-488) ─────────
     mrsty = tables.get("MRSTY")
     tuis = None
     if mrsty is not None:
@@ -408,11 +413,10 @@ def term_blocks(
 
     # ── assemble one row per code ───────────────────────────────────
     arrays = {
-        "alt_labels": alts, "defs": defs, "rel_segs": rel_segments,
-        "tree_segs": tree_segments, "att_segs": att_segments,
-        "cuis": cuis, "tuis": tuis,
+        "defs": defs, "rel_segs": rel_segments, "tree_segs": tree_segments,
+        "att_segs": att_segments, "tuis": tuis,
     }
-    base = pref
+    base = per_code
     for part in (*arrays.values(), is_root):
         if part is not None:
             base = base.join(part, on="code", how="left")
@@ -420,6 +424,8 @@ def term_blocks(
     base = base.select(
         "code",
         "pref_label",
+        F.coalesce(F.col("alt_labels"), empty_arr).alias("alt_labels"),
+        "cuis",
         *[
             (F.coalesce(F.col(c), empty_arr) if part is not None else empty_arr)
             .alias(c)
@@ -700,13 +706,6 @@ def assemble_document(doc: DataFrame, ordered: bool) -> DataFrame:
     else:
         doc = doc.sortWithinPartitions("sort")
     return doc.select("ttl")
-
-
-def _empty_like(ref_df: DataFrame, cols: str) -> DataFrame:
-    spark = ref_df.sparkSession
-    return spark.createDataFrame(
-        [], ", ".join(f"{c} string" for c in cols.split())
-    )
 
 
 def ontology_header(

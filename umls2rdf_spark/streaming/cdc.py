@@ -65,9 +65,10 @@ def cdc_epoch(
     replay-idempotent), overwrite the epoch's index + stats
     partitions, return the per-document stats frame."""
     spark = batch_df.sparkSession
+    # both partition writes below read the fingerprints: chunk once
     fp = fingerprinted_occurrences(
         batch_df, id_col, text_col, window, divisor
-    )
+    ).persist()
     prior = read_standing_state(spark, f"{state_dir}/chunkidx")
     if prior is not None:
         prior = (
@@ -118,12 +119,15 @@ def cdc_epoch(
         if prior is not None
         else win.select("__h1", "__h2")
     )
-    fresh.write.mode("overwrite").parquet(
-        f"{state_dir}/chunkidx/batch_id={batch_id}"
-    )
-    full.write.mode("overwrite").parquet(
-        f"{state_dir}/stats/batch_id={batch_id}"
-    )
+    try:
+        fresh.write.mode("overwrite").parquet(
+            f"{state_dir}/chunkidx/batch_id={batch_id}"
+        )
+        full.write.mode("overwrite").parquet(
+            f"{state_dir}/stats/batch_id={batch_id}"
+        )
+    finally:
+        fp.unpersist()
     return spark.read.parquet(f"{state_dir}/stats/batch_id={batch_id}")
 
 
