@@ -6,11 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-from umls2rdf_spark.operators.grouping import (
-    alt_labels,
-    collect_sorted_set,
-    sorted_set,
-)
+from umls2rdf_spark.operators.grouping import alt_labels, sorted_set
 from umls2rdf_spark.operators.ranking import (
     cascade_order,
     rank_order,
@@ -28,7 +24,9 @@ def test_collect_sorted_set_and_alt_labels(spark):
     )
     collected = {
         r["code"]: r["values"]
-        for r in collect_sorted_set(atoms, ["code"], "label").collect()
+        for r in atoms.groupBy("code")
+        .agg(sorted_set("label").alias("values"))
+        .collect()
     }
     assert collected["K1"] == ["Alt A", "Alt B", "Pref"]
 

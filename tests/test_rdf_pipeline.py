@@ -4,6 +4,8 @@ shapes, same expected Turtle fragments)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -63,12 +65,24 @@ def tables_from(spark, atoms=(), rels=(), stys=(), atts=(), defs=()):
     }
 
 
-def render(spark, load_on_cuis=True, dedupe=True, tree=None, **fixtures):
-    tables = tables_from(spark, **fixtures)
-    blocks = term_blocks(
-        ontology_frames(tables, "TEST", load_on_cuis=load_on_cuis, tree=tree),
-        NS, dedupe=dedupe,
+def frames_of(spark, load_on_cuis=True, tree=None, **fixtures):
+    return ontology_frames(
+        tables_from(spark, **fixtures), "TEST", load_on_cuis=load_on_cuis,
+        tree=tree,
     )
+
+
+def code_shuffles(df):
+    """Exchanges keyed by ``code`` alone in ``df``'s plan before AQE
+    re-plans it at run time (read it before the first action)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(
+        re.findall(r"Exchange hashpartitioning\(code#\d+, \d+\)", plan)
+    )
+
+
+def render(spark, load_on_cuis=True, tree=None, **fixtures):
+    blocks = term_blocks(frames_of(spark, load_on_cuis, tree, **fixtures), NS)
     return {r["code"]: r["ttl"] for r in blocks.collect()}
 
 
@@ -82,9 +96,10 @@ def test_dedupes_duplicate_literal_triples_in_load_on_codes_mode(spark):
         stys=[make_sty("C0001", "T001")],
     )
     expected = '<http://example.org/test/TH> """NLM (1994)"""^^xsd:string ;'
-    without = render(spark, load_on_cuis=False, dedupe=False, **fixtures)
-    withd = render(spark, load_on_cuis=False, dedupe=True, **fixtures)
-    assert without["CODE1"].count(expected) == 2
+    # the duplicate reaches the export frames; the block renders it once
+    atts = frames_of(spark, load_on_cuis=False, **fixtures).atts.collect()
+    assert [tuple(r) for r in atts].count(("CODE1", "TH", "NLM (1994)")) == 2
+    withd = render(spark, load_on_cuis=False, **fixtures)
     assert withd["CODE1"].count(expected) == 1
 
 
@@ -96,9 +111,11 @@ def test_dedupes_duplicate_subclass_triples_in_load_on_cuis_mode(spark):
         stys=[make_sty("C0001", "T001")],
     )
     expected = "rdfs:subClassOf <http://example.org/test/CParent> ;"
-    without = render(spark, dedupe=False, **fixtures)
-    withd = render(spark, dedupe=True, **fixtures)
-    assert without["C0001"].count(expected) == 2
+    rels = frames_of(spark, **fixtures).rels.select("code", "REL", "target_code")
+    assert [tuple(r) for r in rels.collect()].count(
+        ("C0001", "CHD", "CParent")
+    ) == 2
+    withd = render(spark, **fixtures)
     assert withd["C0001"].count(expected) == 1
 
 
@@ -113,9 +130,13 @@ def test_dedupes_duplicate_object_triples_in_load_on_cuis_mode(spark):
         "<http://example.org/test/relatedTo> "
         "<http://example.org/test/CTarget> ;"
     )
-    without = render(spark, dedupe=False, **fixtures)
-    withd = render(spark, dedupe=True, **fixtures)
-    assert without["C0001"].count(expected) == 2
+    rels = frames_of(spark, **fixtures).rels.select(
+        "code", "RELA", "target_code"
+    )
+    assert [tuple(r) for r in rels.collect()].count(
+        ("C0001", "relatedTo", "CTarget")
+    ) == 2
+    withd = render(spark, **fixtures)
     assert withd["C0001"].count(expected) == 1
 
 
@@ -303,12 +324,12 @@ def test_mesh_tree_and_tree_mode_export(spark):
         "MRSAT": spark.createDataFrame([], MRSAT),
         "MRDEF": spark.createDataFrame([], MRDEF),
     }
-    blocks = {
-        r["code"]: r["ttl"]
-        for r in term_blocks(
-            ontology_frames(tables, "MSH", load_on_cuis=False, tree=tree), NS
-        ).collect()
-    }
+    tree_blocks = term_blocks(
+        ontology_frames(tables, "MSH", load_on_cuis=False, tree=tree), NS
+    )
+    # tree parents are parts too: still two shuffles by code
+    assert code_shuffles(tree_blocks) == 2
+    blocks = {r["code"]: r["ttl"] for r in tree_blocks.collect()}
     # tree parent emitted as subclass on the child...
     assert "rdfs:subClassOf <http://example.org/test/D001> ;" in blocks["D002"]
     # ...and the CHD rel itself becomes an object property (hierarchy off)
@@ -416,7 +437,9 @@ def test_root_detected_via_unresolvable_src_parent(spark):
 
 
 # ── plan shape: the preferred label, alt labels and CUIs come from one
-# min_by aggregation per code, so no window sorts the atoms ─────────
+# min_by aggregation per code, so no window sorts the atoms; every
+# other part of a block is collected by one more aggregation, so the
+# plan shuffles by code exactly twice ─────────────────────────────
 @pytest.mark.parametrize("load_on_cuis", [False, True])
 def test_term_blocks_plan_has_no_window(spark, load_on_cuis):
     tables = tables_from(
@@ -437,6 +460,7 @@ def test_term_blocks_plan_has_no_window(spark, load_on_cuis):
     blocks = term_blocks(
         ontology_frames(tables, "TEST", load_on_cuis=load_on_cuis), NS
     )
+    assert code_shuffles(blocks) == 2
     assert len(blocks.collect()) == 2
     plan = blocks._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan

@@ -7,9 +7,10 @@ aggregation map-side, one shuffle on the key, arrays stay distributed.
 
 Callers: the Turtle export (``rdf.ontology.term_blocks``) takes a
 class's labels and CUIs as :func:`sorted_set` aggregates in the same
-per-code aggregation as its preferred label, derives the alt labels
-from them with :func:`alt_labels`, and builds its definition, TUI and
-mesh-tree parent arrays with :func:`collect_sorted_set`.
+per-code aggregation as its preferred label and derives the alt labels
+from them with :func:`alt_labels`; its other per-class parts are rows
+of one ``collect_list`` aggregation of its own. The ``queries()``
+demos in ``plans.reference_demos`` use :func:`string_agg_sorted`.
 """
 
 from __future__ import annotations
@@ -26,16 +27,6 @@ def sorted_set(value: str | Column) -> Column:
     the same way, e.g. altLabels at umls2rdf.py:410-412)."""
     value = F.col(value) if isinstance(value, str) else value
     return F.array_sort(F.collect_set(value))
-
-
-def collect_sorted_set(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str | Column,
-    out_col: str = "values",
-) -> DataFrame:
-    """:func:`sorted_set` per group."""
-    return df.groupBy(*group_cols).agg(sorted_set(value_col).alias(out_col))
 
 
 def string_agg_sorted(

@@ -17,7 +17,9 @@ key negates it (numeric keys only).
 Callers: the Turtle export (``rdf.ontology.term_blocks``) takes its
 preferred label with :func:`top1_value` over :func:`rank_order`
 (code mode) or :func:`cascade_order` (cuis mode), in the same
-aggregation as the alt labels and CUIs.
+aggregation as the alt labels and CUIs. The ``queries()`` demos in
+``plans.reference_demos`` and ``plans.analytics_extra`` use
+:func:`top1_per_group` and :func:`ranked_top1`.
 """
 
 from __future__ import annotations

@@ -3,10 +3,11 @@
 This is the Spark rebuild of the reference's whole pipeline
 (UmlsOntology at umls2rdf.py:536, UmlsClass.toRDF at umls2rdf.py:391):
 the reference loads every table into driver RAM and loops over codes;
-here each per-class component (labels, definitions, resolved
-relations, attributes, semantic types, root flags) is an aggregation
-keyed by the class code, joined on it, and the Turtle block is
-rendered by a single projection.
+here a class's labels and CUIs are one aggregation keyed by the class
+code, every other per-class component (definitions, root flag, tree
+parents, resolved relations, attributes, semantic types) is a row of
+one more aggregation keyed by the code, the two are joined once, and
+the Turtle block is rendered by a single projection.
 
 Each UMLS rule is the ``operators/`` function whose ``queries()`` demo
 is checked against DuckDB: the preferred label is the ``ranking``
@@ -19,9 +20,10 @@ AUI bridge, resolved rels, MRSAT rows, the object-property rule) once;
 the class blocks and the property list both derive from them.
 
 Plan shape, measured on a 4-core local session over a seeded
-4000-concept SNOMEDCT_US release: the class-block plan holds 15 hash
-Exchanges, 10 broadcast Exchanges, no Window and 14 CSV scans (8 of
-MRCONSO, 1 of MRRANK) before AQE re-plans it.
+4000-concept SNOMEDCT_US release (``tools/job_counts.py --export``):
+the class-block plan holds 7 hash Exchanges (2 keyed by ``code``), 7
+broadcast Exchanges, no Window and 13 CSV scans (7 of MRCONSO, 1 of
+MRRANK) before AQE re-plans it.
 
 Rendering mirrors the reference byte-for-byte where the reference is
 deterministic; where it depends on MySQL row order (tie-breaks among
@@ -38,11 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from umls2rdf_spark.functions.text import UMLS_LANGCODE_MAP, url_term
-from umls2rdf_spark.operators.grouping import (
-    alt_labels,
-    collect_sorted_set,
-    sorted_set,
-)
+from umls2rdf_spark.operators.grouping import alt_labels, sorted_set
 from umls2rdf_spark.operators.hierarchy import (
     detect_roots,
     prefix_parent,
@@ -217,11 +215,40 @@ def _fragment() -> Column:
     ).otherwise(F.col("REL"))
 
 
-def term_blocks(
-    frames: OntologyFrames, ns: str, dedupe: bool = True
-) -> DataFrame:
+# Sections of a class block's parts (term_blocks), in block order.
+_ROOT, _DEFS, _TREE, _RELS, _ATTS, _TUIS = range(6)
+
+
+def _part(
+    sec: int,
+    k1: Column | None = None,
+    k2: Column | None = None,
+    k3: Column | None = None,
+    segs: Column | None = None,
+) -> Column:
+    """One part of a class block: its section, its order keys inside
+    the section and its rendered segments."""
+    def key(c: Column | None) -> Column:
+        return F.lit(None).cast("string") if c is None else c
+
+    if segs is None:
+        segs = F.lit(None).cast("array<string>")
+    return F.struct(
+        F.lit(sec).alias("sec"), key(k1).alias("k1"), key(k2).alias("k2"),
+        key(k3).alias("k3"), segs.alias("segs"),
+    )
+
+
+def term_blocks(frames: OntologyFrames, ns: str) -> DataFrame:
     """(code, ttl) — one rendered Turtle class block per code,
     byte-compatible with UmlsClass.toRDF (umls2rdf.py:391-490).
+
+    Labels and CUIs are one aggregation over the atoms. Every other
+    part of a block (definitions, root flag, tree parents, rels,
+    attributes, TUIs) is a ``(code, part)`` row; the rows of all parts
+    are collected by one ``groupBy("code")``, sorted by (section, keys),
+    left-joined once onto the labels, and each section is filtered
+    back out of the sorted array to render the block.
 
     With ``frames.tree`` (MSH), tree parents are emitted instead of
     CHD rels, and CHD rels render as object properties.
@@ -277,22 +304,15 @@ def term_blocks(
         "cuis",
     )
 
-    # ── definitions: join by AUI (code mode) / CUI (cuis mode) ─────
-    mrdef = tables.get("MRDEF")
-    defs = None
-    if mrdef is not None:
-        defkey = "CUI" if load_on_cuis else "AUI"
-        defs = collect_sorted_set(
-            mrdef.where(F.col("SAB") == ont_code).join(
-                atoms.select(defkey, "code").dropDuplicates([defkey, "code"]),
-                on=defkey,
-            ),
-            ["code"], "DEF", "defs",
-        )
+    # ── every other part: (code, part) rows ─────────────────────────
+    parts = []
 
-    # ── root detection (umls2rdf.py:692-713): CHD rel whose CUI1 is a
+    def add(rows: DataFrame, part: Column) -> None:
+        parts.append(rows.select("code", part.alias("part")))
+
+    # root detection (umls2rdf.py:692-713): CHD rel whose CUI1 is a
     # root CUI (code mode requires REL='CHD'; cuis mode any rel);
-    # ICD10CM's patched root parent included ─────────────────────────
+    # ICD10CM's patched root parent included
     flagged = detect_roots(
         frames.src_rels, root_cuis(mrconso, ont_code),
         on=("CUI1", "root_cui"), flag_col="__root",
@@ -304,11 +324,28 @@ def term_blocks(
             root_cond = root_cond | (
                 (F.col("CUI1") == "C3264380") & (F.col("REL") == "CHD")
             )
-    is_root = flagged.where(root_cond).select("code").distinct().withColumn(
-        "is_root", F.lit(True)
-    )
+    add(flagged.where(root_cond), _part(_ROOT))
 
-    # ── relations: classified, ordered, rendered ────────────────────
+    # definitions: join by AUI (code mode) / CUI (cuis mode)
+    mrdef = tables.get("MRDEF")
+    if mrdef is not None:
+        defkey = "CUI" if load_on_cuis else "AUI"
+        defs = mrdef.where(
+            (F.col("SAB") == ont_code) & F.col("DEF").isNotNull()
+        ).join(atoms.select(defkey, "code"), on=defkey)
+        add(defs, _part(_DEFS, F.col("DEF")))
+
+    # tree parents (MSH mesh tree, umls2rdf.py:423-426)
+    if frames.tree is not None:
+        add(
+            frames.tree.withColumnRenamed("child", "code"),
+            _part(
+                _TREE, F.col("parent"),
+                segs=F.array(subclass_triple(url_term(ns, F.col("parent")))),
+            ),
+        )
+
+    # relations: classified, ordered CHD first, rendered
     emit_sub = (
         (F.col("REL") == "CHD")
         & F.lit(frames.tree is None)
@@ -322,162 +359,98 @@ def term_blocks(
             url_term(ns, _fragment()), url_term(ns, F.col("target_code"))
         ),
     )
-    rel_segments = (
-        frames.rels.withColumn("__seg", rendered_rel)
-        .where(F.col("__seg").isNotNull())
-        .groupBy("code")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.when(F.col("REL") == "CHD", 0)
-                            .otherwise(1)
-                            .alias("k1"),
-                            _fragment().alias("k2"),
-                            F.col("target_code").alias("k3"),
-                            F.col("code").alias("k4"),
-                            F.col("__seg").alias("seg"),
-                        )
-                    )
-                ),
-                lambda s: s["seg"],
-            ).alias("rel_segs")
-        )
+    add(
+        frames.rels.withColumn("__seg", rendered_rel).where(
+            F.col("__seg").isNotNull()
+        ),
+        _part(
+            _RELS, F.when(F.col("REL") == "CHD", "0").otherwise("1"),
+            _fragment(), F.col("target_code"), F.array(F.col("__seg")),
+        ),
     )
-    # ── tree parents (MSH mesh tree, umls2rdf.py:423-426) ──────────
-    tree_segments = None
-    if frames.tree is not None:
-        tree_segments = collect_sorted_set(
-            frames.tree.withColumnRenamed("child", "code"),
-            ["code"], "parent", "parents",
-        ).select(
-            "code",
-            F.transform(
-                F.col("parents"), lambda p: subclass_triple(url_term(ns, p))
-            ).alias("tree_segs"),
-        )
 
-    # ── attributes (umls2rdf.py:457-474) ────────────────────────────
-    att_segments = None
+    # attributes (umls2rdf.py:457-474); a duplicated (ATN, ATV) row
+    # keeps its own segments, flattened after the sort
     if frames.atts is not None:
-        atts = frames.atts.join(
-            atoms.select("code").distinct(), on="code", how="left_semi"
-        )
         mn_root = (
             F.lit(frames.tree is not None)
             & (F.col("ATN") == "MN")
             & F.col("code").startswith("D")
             & (F.size(F.split(F.col("ATV"), "\\.")) == 1)
         )
-        att_arr = F.when(
-            mn_root,
-            F.array(
-                F.lit(_OWL_THING_SUB),
-                literal_triple(url_term(ns, F.col("ATN")), F.col("ATV")),
-            ),
-        ).otherwise(
-            F.array(literal_triple(url_term(ns, F.col("ATN")), F.col("ATV")))
-        )
-        att_segments = (
-            atts.withColumn("__segs", att_arr)
-            .groupBy("code")
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("ATN").alias("k1"),
-                                    F.col("ATV").alias("k2"),
-                                    F.col("__segs").alias("segs"),
-                                )
-                            )
-                        ),
-                        lambda s: s["segs"],
-                    )
-                ).alias("att_segs")
-            )
+        att_line = literal_triple(url_term(ns, F.col("ATN")), F.col("ATV"))
+        att_segs = F.when(
+            mn_root, F.array(F.lit(_OWL_THING_SUB), att_line)
+        ).otherwise(F.array(att_line))
+        add(
+            frames.atts,
+            _part(_ATTS, F.col("ATN"), F.col("ATV"), segs=att_segs),
         )
 
-    # ── semantic types: TUIs per code (umls2rdf.py:477-488) ─────────
+    # semantic types: TUIs per code (umls2rdf.py:477-488)
     mrsty = tables.get("MRSTY")
-    tuis = None
     if mrsty is not None:
-        tuis = collect_sorted_set(
-            atoms.select("code", "CUI")
-            .distinct()
-            .join(mrsty.select("CUI", "TUI").distinct(), on="CUI"),
-            ["code"], "TUI", "tuis",
+        tuis = atoms.select("code", "CUI").join(
+            mrsty.where(F.col("TUI").isNotNull()).select("CUI", "TUI"),
+            on="CUI",
         )
+        add(tuis, _part(_TUIS, F.col("TUI")))
 
-    # ── assemble one row per code ───────────────────────────────────
-    arrays = {
-        "defs": defs, "rel_segs": rel_segments, "tree_segs": tree_segments,
-        "att_segs": att_segments, "tuis": tuis,
-    }
-    base = per_code
-    for part in (*arrays.values(), is_root):
-        if part is not None:
-            base = base.join(part, on="code", how="left")
-    empty_arr = F.array().cast("array<string>")
-    base = base.select(
-        "code",
-        "pref_label",
-        F.coalesce(F.col("alt_labels"), empty_arr).alias("alt_labels"),
-        "cuis",
-        *[
-            (F.coalesce(F.col(c), empty_arr) if part is not None else empty_arr)
-            .alias(c)
-            for c, part in arrays.items()
-        ],
-        F.coalesce(F.col("is_root"), F.lit(False)).alias("is_root"),
+    # ── one aggregation of the parts, one join onto the labels ──────
+    by_code = reduce(DataFrame.unionByName, parts).groupBy("code").agg(
+        F.array_sort(F.collect_list("part")).alias("parts")
     )
+    # a code without parts gets NULL ``parts``: every section is then
+    # NULL, which the rendering below turns into ''
+    base = per_code.join(by_code, on="code", how="left")
+
+    def section(*secs: int) -> Column:
+        return F.filter(F.col("parts"), lambda p: p["sec"].isin(*secs))
+
+    # a definition or TUI repeats once per atom that reaches it;
+    # dropping repeats from the sorted keys gives their sorted set
+    def distinct_keys(sec: int) -> Column:
+        return F.array_distinct(F.transform(section(sec), lambda p: p["k1"]))
 
     url = url_term(ns, F.col("code"))
     header = class_header(url, F.col("pref_label"), F.col("code"), lang)
 
-    def labels(pred: str, col: str) -> Column:
+    def labels(pred: str, values: Column) -> Column:
         return F.when(
-            F.size(col) > 0,
+            F.size(values) > 0,
             F.concat(
-                F.lit(f"\t{pred} "), lang_literal_list(F.col(col), lang),
+                F.lit(f"\t{pred} "), lang_literal_list(values, lang),
                 F.lit(" ;\n"),
             ),
         ).otherwise(F.lit(""))
 
-    def lines(col: str, render) -> Column:
-        return F.concat_ws("", F.transform(F.col(col), render))
+    def lines(values: Column, render) -> Column:
+        return F.concat_ws("", F.transform(values, render))
 
-    root_arr = F.when(
-        F.col("is_root"), F.array(F.lit(_OWL_THING_SUB))
-    ).otherwise(empty_arr)
-    all_segs = F.concat(
-        root_arr, F.col("tree_segs"), F.col("rel_segs"), F.col("att_segs")
-    )
-    if dedupe:
-        all_segs = F.array_distinct(all_segs)
-    # the root segment renders between altLabels and defs; drop it
-    # from the tail (dedupe keeps it at index 0 when present)
+    # the root segment renders between altLabels and defs, so it is
+    # dropped from the (deduplicated) tree/rel/attribute segments
+    is_root = F.exists(F.col("parts"), lambda p: p["sec"] == _ROOT)
+    segs = F.array_distinct(F.flatten(
+        F.transform(section(_TREE, _RELS, _ATTS), lambda p: p["segs"])
+    ))
     tail = F.when(
-        F.col("is_root"), F.slice(all_segs, 2, F.size(all_segs))
-    ).otherwise(all_segs)
-    root_part = F.when(F.col("is_root"), F.lit(_OWL_THING_SUB)).otherwise(
-        F.lit("")
-    )
+        is_root, F.array_remove(segs, _OWL_THING_SUB)
+    ).otherwise(segs)
+    root_part = F.when(is_root, F.lit(_OWL_THING_SUB)).otherwise(F.lit(""))
+    tuis = distinct_keys(_TUIS)
     block = F.concat(
         header,
-        labels("skos:altLabel", "alt_labels"),
+        labels("skos:altLabel", F.col("alt_labels")),
         root_part,
-        labels("skos:definition", "defs"),
+        labels("skos:definition", distinct_keys(_DEFS)),
         F.concat_ws("", tail),
-        lines("cuis", lambda c: F.concat(
+        lines(F.col("cuis"), lambda c: F.concat(
             F.lit(f"\t{HAS_CUI} "), tq(c), F.lit("^^xsd:string ;\n")
         )),
-        lines("tuis", lambda t: F.concat(
+        lines(tuis, lambda t: F.concat(
             F.lit(f"\t{HAS_TUI} "), tq(t), F.lit("^^xsd:string ;\n")
         )),
-        lines("tuis", lambda t: F.concat(
+        lines(tuis, lambda t: F.concat(
             F.lit(f"\t{HAS_STY} <{STY_NS}"), t, F.lit("> ;\n")
         )),
         F.lit(" .\n\n"),

@@ -24,7 +24,6 @@ PREFIXES = """
 @prefix umls: <http://bioportal.bioontology.org/ontologies/umls/> .
 """
 
-STY_URL = "http://bioportal.bioontology.org/ontologies/umls/sty/"
 HAS_STY = "umls:hasSTY"
 HAS_CUI = "umls:cui"
 HAS_TUI = "umls:tui"
@@ -89,7 +88,7 @@ def simple_literal(value: Column | str) -> Column:
 
 
 __all__ = [
-    "PREFIXES", "STY_URL", "HAS_STY", "HAS_CUI", "HAS_TUI",
+    "PREFIXES", "HAS_STY", "HAS_CUI", "HAS_TUI",
     "tq", "object_triple", "literal_triple", "subclass_triple",
     "class_header", "lang_literal_list", "simple_literal", "url_term",
 ]
